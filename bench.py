@@ -277,6 +277,10 @@ def main() -> None:
         calibration["engine_q1_warm_min2_paired"]
         / calibration["plain_q1_warm_min2"], 3)
     total = round(sum(timings.values()), 3)
+    # the core count Spark resolved for local[$SPARK_GRAFT_CPUS], for both
+    # the JSON field and the per-cpus file name; an int, so the name never
+    # carries a raw environment value
+    cpus = spark.sparkContext.defaultParallelism
     # VERDICT r8 wrong #1 (third attempt at a machine-parseable BENCH
     # artifact): the driver keeps only the last ~2000 chars of stdout, and
     # a 70+-query per-query dict pushes the one-line JSON past that, so
@@ -297,7 +301,8 @@ def main() -> None:
         # count the run used, and the per-key min-of-N tier (how many warm
         # runs each key's reported MIN came from) so cross-round per-key
         # comparisons can be like-for-like.
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
+        "cpus": cpus,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
         "warm_runs": warm_runs,
     }
     repo_dir = os.path.dirname(os.path.abspath(__file__))
@@ -308,8 +313,7 @@ def main() -> None:
     # core counts and its second run overwrites bench_out.json, erasing
     # the first run's per-key dict — write a per-cpus copy too so both
     # runs' per-key timings survive and PERF can compare per-query.
-    cpus_tag = os.environ.get("SPARK_GRAFT_CPUS", "any")
-    with open(os.path.join(repo_dir, f"bench_out_c{cpus_tag}.json"), "w") as fh:
+    with open(os.path.join(repo_dir, f"bench_out_c{cpus}.json"), "w") as fh:
         fh.write(json.dumps(full, separators=(",", ":")) + "\n")
     sys.stdout.flush()
     print(stdout_line(full), flush=True)

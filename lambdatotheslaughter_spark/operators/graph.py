@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from lambdatotheslaughter_spark.determinism import (broadcast_if_bounded,
                                                     estimate_rows)
 from lambdatotheslaughter_spark.registry import register
+from lambdatotheslaughter_spark.session import INITIAL_PARTITIONS_CONF
 from lambdatotheslaughter_spark.tables import load_table
 
 _SCALE = 10**12
@@ -1334,14 +1335,17 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
         # column-only form let AQE coalesce the 20.8M-row exchange into a
         # few fat partitions, which straggler-amplified at low core counts
         # (the driver's local[8] run read 8.09 s, over the 8 s family
-        # bar). Pinning to spark.sql.shuffle.partitions keeps the fold's
-        # task width at the session's configured parallelism — a
-        # cluster-scale conf, not a local[32] constant — and the r12
-        # interleaved fresh-JVM A/B read the pinned shape at-or-under the
-        # AQE shape in every comparable pair at BOTH core counts
-        # (32c: 4.29/4.02/4.12 vs 4.68/4.24/4.99; 8c quiet: 5.30/5.88 vs
+        # bar). Pinning to the session's batch shuffle width (the width
+        # AQE starts batch shuffles at: initialPartitionNum, else
+        # spark.sql.shuffle.partitions) keeps the fold's task width at
+        # the session's configured parallelism — a cluster-scale conf,
+        # not a local[32] constant — and the r12 interleaved fresh-JVM
+        # A/B read the pinned shape (32 wide) at-or-under the AQE shape
+        # in every comparable pair at BOTH core counts (32c:
+        # 4.29/4.02/4.12 vs 4.68/4.24/4.99; 8c quiet: 5.30/5.88 vs
         # 6.21 — under the 8 s bar; OPTIMIZATION_r12.md §1b).
-        nshuf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        nshuf = int(spark.conf.get(INITIAL_PARTITIONS_CONF, None)
+                    or spark.conf.get("spark.sql.shuffle.partitions"))
         cand = (wed.select(F.shiftleft(F.col("x"), 32)
                            .bitwiseOR(F.col("y")).alias("pk"), "term_fp")
                 .repartition(nshuf, F.col("pk"))

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import DEC, dsum, oracle_dsum
 from lambdatotheslaughter_spark.registry import register
+from lambdatotheslaughter_spark.streaming.harness import await_drained
 from lambdatotheslaughter_spark.tables import load_table
 
 
@@ -269,7 +270,7 @@ def sink_stream_console_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("checkpointLocation", f"/tmp/lts_ckpt_{name}")
          .trigger(availableNow=True)
          .format("memory").queryName(name).start())
-    q.awaitTermination(timeout=300)
+    await_drained(q)
     return spark.table(name)
 
 
@@ -324,7 +325,7 @@ def stream_stateful_state_op(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("checkpointLocation", f"/tmp/lts_ckpt_{name}")
          .trigger(availableNow=True)
          .format("memory").queryName(name).start())
-    q.awaitTermination(timeout=300)
+    await_drained(q)
     return spark.table(name)
 
 
@@ -400,7 +401,7 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("checkpointLocation", f"/tmp/lts_ckpt_{name}")
          .trigger(availableNow=True)
          .format("memory").queryName(name).start())
-    q.awaitTermination(timeout=300)
+    await_drained(q)
     return spark.table(name)
 
 
@@ -661,7 +662,7 @@ def sink_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True)
          .toTable(table))
-    q.awaitTermination(timeout=300)
+    await_drained(q)
     out = tumbling_agg(spark.table(table)).localCheckpoint(eager=True)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     shutil.rmtree(ckpt, ignore_errors=True)
@@ -722,7 +723,7 @@ def stream_rate_source_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True)
              .toTable(table))
-        q.awaitTermination(timeout=300)
+        await_drained(q)
     out = (spark.table(table)
            .groupBy(F.window("timestamp", "2 minutes").alias("w"))
            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),

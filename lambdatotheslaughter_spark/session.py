@@ -1,10 +1,13 @@
-"""SparkSession factory tuned for the local[32] test box but configured the
-way a 1000-executor cluster job would be: AQE on (runtime re-planning, skew
-join splitting, partition coalescing), explicit UTC session timezone (oracle
-hash alignment), Arrow enabled for the Pandas-UDF slow path.
+"""SparkSession factory configured the way a 1000-executor cluster job
+would be: AQE on (runtime re-planning, skew join splitting, partition
+coalescing), explicit UTC session timezone (oracle hash alignment), Arrow
+enabled for the Pandas-UDF slow path.
 
-At cluster scale the only knobs that change are master / memory / shuffle
-partitions; query code never needs to know.
+Streaming shuffles follow the cores the local session runs on, so one
+micro-batch costs one wave of tasks rather than several; batch shuffles
+start at a fixed width that AQE coalesces. At cluster scale the only
+knobs that change are master / memory / shuffle partitions; query code
+never needs to know.
 """
 
 from __future__ import annotations
@@ -13,7 +16,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+# width every batch shuffle starts at before AQE coalesces it, kept apart
+# from the core-sized streaming width: at local[8] on a 4-core host,
+# batch shuffles started 8 wide ran bench.py's heavy graph and LSH keys
+# 12-25% slower than at 32 (uneven tasks, no spare ones to balance them)
+BATCH_SHUFFLE_PARTITIONS = 32
+INITIAL_PARTITIONS_CONF = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
 
 def get_spark(app_name: str = "lambdatotheslaughter_spark",
@@ -22,14 +30,24 @@ def get_spark(app_name: str = "lambdatotheslaughter_spark",
 
     Keeps one session per process: the driver and bench amortize the ~10 s
     JVM startup across every query (BASELINE.md bench guidance).
+
+    ``shuffle_partitions``, else ``SPARK_GRAFT_SHUFFLE``, sets the width of
+    every shuffle. Without either, the two kinds of query get their own:
+
+    - Streaming queries run without AQE, so ``spark.sql.shuffle.partitions``
+      is their shuffle width and a stateful query's number of state stores.
+      It is the session's default parallelism: the cores Spark resolved for
+      ``local[SPARK_GRAFT_CPUS]`` (for ``local[*]``, the cores the JVM may
+      use). A stateful query keeps the count it first started with: Spark
+      restores it from the checkpoint's offset log.
+    - Batch queries run under AQE, which starts each shuffle at
+      ``initialPartitionNum`` (``BATCH_SHUFFLE_PARTITIONS``) and coalesces.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder
         .master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -74,5 +92,9 @@ def get_spark(app_name: str = "lambdatotheslaughter_spark",
             .config("spark.sql.files.maxPartitionBytes", "512m")
         )
     spark = builder.getOrCreate()
+    width = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", 0))
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(width or spark.sparkContext.defaultParallelism))
+    spark.conf.set(INITIAL_PARTITIONS_CONF, str(width or BATCH_SHUFFLE_PARTITIONS))
     spark.sparkContext.setLogLevel("WARN")
     return spark

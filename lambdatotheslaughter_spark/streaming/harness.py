@@ -18,6 +18,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from lambdatotheslaughter_spark.tables import load_table
 
@@ -29,6 +30,20 @@ EVENT_STREAM_SCHEMA = T.StructType([
     T.StructField("value", T.DoubleType()),
     T.StructField("props", T.StringType()),
 ])
+
+# seconds an AvailableNow drain may take before it counts as hung
+RUN_TIMEOUT_S = 300
+
+
+def await_drained(q: StreamingQuery) -> None:
+    """Wait for an AvailableNow query to drain its input, so the caller
+    never reads a partial sink: a failed query's exception is re-raised
+    (by awaitTermination), and a query still running after
+    ``RUN_TIMEOUT_S`` is stopped and TimeoutError raised."""
+    if not q.awaitTermination(timeout=RUN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream query {q.id} still active after {RUN_TIMEOUT_S} s")
 
 
 class EventStreamHarness:
@@ -79,7 +94,8 @@ class EventStreamHarness:
             foreach_batch=None) -> DataFrame:
         """Apply `transform` to the stream, drain it with AvailableNow
         (honors maxFilesPerTrigger → true multi-micro-batch execution),
-        return the memory-sink table."""
+        return the memory-sink table (never a partial one: see
+        `await_drained`)."""
         name = f"lts_sink_{uuid.uuid4().hex[:8]}"
         ckpt = os.path.join(tempfile.gettempdir(), f"lts_ckpt_{name}")
         out = transform(self.source())
@@ -90,14 +106,15 @@ class EventStreamHarness:
             q = writer.outputMode(output_mode).foreachBatch(foreach_batch).start()
         else:
             q = writer.outputMode(output_mode).format("memory").queryName(name).start()
-        q.awaitTermination(timeout=300)
-        # expose the drained query for tests that need its progress
-        # telemetry (e.g. the final event-time watermark, which decides
-        # which outer-join null rows were evictable before shutdown)
+        # expose the query for tests that need its progress telemetry
+        # (e.g. the final event-time watermark, which decides which
+        # outer-join null rows were evictable before shutdown)
         self.last_query = q
-        result = self.spark.table(name) if foreach_batch is None else None
-        shutil.rmtree(ckpt, ignore_errors=True)
-        return result
+        try:
+            await_drained(q)
+        finally:
+            shutil.rmtree(ckpt, ignore_errors=True)
+        return self.spark.table(name) if foreach_batch is None else None
 
     def cleanup(self) -> None:
         shutil.rmtree(self.input_dir, ignore_errors=True)
@@ -119,16 +136,31 @@ def latest_per_user(df: DataFrame) -> DataFrame:
 def upsert_foreach_batch(serving_path: str):
     """The Kudu-upsert analog (SURVEY §3 entry 2): each micro-batch is
     merged into a keyed parquet serving table, latest row per key wins.
-    Idempotent per batch — replays overwrite with identical content."""
+    Idempotent per batch — replays overwrite with identical content.
+
+    Crash-safe: the merged table is written beside the serving table and
+    swapped in by renames (old table aside, new table in, old table
+    deleted), so at every instant the serving table or its set-aside copy
+    holds every committed key. A batch that finds the table missing but
+    the copy present (a crash mid-swap) restores the copy before merging;
+    Spark replays the uncommitted batch, so no key is lost."""
+    tmp, aside = serving_path + ".tmp", serving_path + ".old"
+
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+        if os.path.exists(aside):
+            if os.path.exists(serving_path):
+                shutil.rmtree(aside)
+            else:
+                os.rename(aside, serving_path)
         new = batch_df
         if os.path.exists(serving_path):
-            old = spark.read.parquet(serving_path)
+            # the table was written from batches of this same schema:
+            # skip footer schema inference on every batch
+            old = batch_df.sparkSession.read.schema(batch_df.schema).parquet(serving_path)
             new = old.unionByName(new)
-        latest = latest_per_user(new)
-        tmp = serving_path + ".tmp"
-        latest.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(serving_path, ignore_errors=True)
+        latest_per_user(new).write.mode("overwrite").parquet(tmp)
+        if os.path.exists(serving_path):
+            os.rename(serving_path, aside)
         os.rename(tmp, serving_path)
+        shutil.rmtree(aside, ignore_errors=True)
     return _merge

@@ -12,6 +12,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.determinism import DEC, csum, dsum
+from lambdatotheslaughter_spark.session import INITIAL_PARTITIONS_CONF as BATCH_WIDTH
 
 # 2-decimal "money" doubles in the testdata's magnitude range
 money = st.integers(min_value=-10_000_000, max_value=10_000_000) \
@@ -136,18 +137,18 @@ def test_rounded_float_queries_stable_across_partitioning(spark):
     embedding outliers, BM25) claim their rounding margin dominates
     partial-merge-order drift. Prove it for real: run each at two very
     different shuffle widths in THIS session by repartitioning the inputs
-    implicitly via spark.sql.shuffle.partitions, and require bit-identical
-    output multisets.
+    implicitly via the batch shuffle width (AQE's initialPartitionNum),
+    and require bit-identical output multisets.
 
     getOrCreate() caches the session, so the conf flip applies to new
-    plans (shuffle.partitions is read at planning time) — no second
-    session needed."""
+    plans (the width is read at planning time) — no second session
+    needed."""
     from lambdatotheslaughter_spark import registry
     from tests.conftest import SF_DIR
 
     names = ["agg_corr_covar", "llm_lm_score", "llm_token_entropy",
              "llm_embedding_outliers", "llm_bm25_rank"]
-    conf = "spark.sql.shuffle.partitions"
+    conf = BATCH_WIDTH
     prev = spark.conf.get(conf)
     results = {}
     try:
@@ -235,12 +236,12 @@ def test_exact_moment_ops_are_partition_invariant(spark):
                  "llm_shuffle_deterministic", "graph_bfs_distance"):
         fn = registry.get(name).fn
         base = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "97")
+        prev = spark.conf.get(BATCH_WIDTH)
+        spark.conf.set(BATCH_WIDTH, "97")
         try:
             churned = sorted(map(tuple, fn(spark, SF_DIR).collect()))
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            spark.conf.set(BATCH_WIDTH, prev)
         assert base == churned, f"{name}: partition-count-dependent values"
 
 
@@ -256,17 +257,17 @@ def test_round6_stats_partition_invariance(spark):
             "stat_gini_coefficient", "stat_anova_oneway_f",
             "stat_kendall_tau", "stat_spearman_rho",
             "graph_assortativity_degree", "stat_bootstrap_poisson_ci"]
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+    old = spark.conf.get(BATCH_WIDTH)
     baseline = {k: sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                               .collect())) for k in keys}
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "97")
+        spark.conf.set(BATCH_WIDTH, "97")
         for k in keys:
             got = sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                              .collect()))
             assert got == baseline[k], f"{k} drifted under 97 partitions"
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        spark.conf.set(BATCH_WIDTH, old)
 
 
 def test_third_ring_partition_invariance(spark):
@@ -300,17 +301,17 @@ def test_third_ring_partition_invariance(spark):
             "stat_friedman_test", "ts_permutation_entropy",
             "stat_kruskal_wallis", "win_skyline_2d",
             "stat_mood_median_test"]
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+    old = spark.conf.get(BATCH_WIDTH)
     baseline = {k: sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                               .collect())) for k in keys}
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "97")
+        spark.conf.set(BATCH_WIDTH, "97")
         for k in keys:
             got = sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                              .collect()))
             assert got == baseline[k], f"{k} drifted under 97 partitions"
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        spark.conf.set(BATCH_WIDTH, old)
 
 
 def test_seventh_ring_partition_invariance(spark):
@@ -342,14 +343,14 @@ def test_seventh_ring_partition_invariance(spark):
             "stat_meta_fixed_effect_pool",
             "llm_eval_ndcg_at10", "dq_cardinality_drift_report",
             "stat_capability_indices"]
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+    old = spark.conf.get(BATCH_WIDTH)
     baseline = {k: sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                               .collect())) for k in keys}
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "97")
+        spark.conf.set(BATCH_WIDTH, "97")
         for k in keys:
             got = sorted(map(tuple, registry.get(k).fn(spark, SF_DIR)
                              .collect()))
             assert got == baseline[k], f"{k} drifted under 97 partitions"
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        spark.conf.set(BATCH_WIDTH, old)

@@ -6,6 +6,7 @@ ANN/LSH operators (SURVEY §5)."""
 from __future__ import annotations
 
 from lambdatotheslaughter_spark import registry
+from lambdatotheslaughter_spark.session import INITIAL_PARTITIONS_CONF as BATCH_WIDTH
 from tests.conftest import SF_DIR
 
 
@@ -259,7 +260,7 @@ def test_sketch_rollup_within_tolerance_and_deterministic(spark, duck):
     widths (HLL sketches are deterministic functions of the value set)."""
     exact = duck.execute(
         "SELECT COUNT(DISTINCT user_id) FROM events").fetchone()[0]
-    conf = "spark.sql.shuffle.partitions"
+    conf = BATCH_WIDTH
     prev = spark.conf.get(conf)
     got = []
     try:
@@ -775,7 +776,7 @@ def test_pq_quantize_error_bound_and_determinism(spark):
     order-free by construction)."""
     from lambdatotheslaughter_spark import registry
 
-    conf = "spark.sql.shuffle.partitions"
+    conf = BATCH_WIDTH
     prev = spark.conf.get(conf)
     rows = []
     try:

@@ -10,6 +10,8 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import time
+import uuid
 
 import pandas as pd
 import pytest
@@ -17,8 +19,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from lambdatotheslaughter_spark.operators import streaming_twins as tw
+from lambdatotheslaughter_spark.streaming import harness as harness_mod
 from lambdatotheslaughter_spark.streaming.harness import (
-    EventStreamHarness, upsert_foreach_batch)
+    EventStreamHarness, latest_per_user, upsert_foreach_batch)
 from lambdatotheslaughter_spark.tables import load_table
 from tests.conftest import SMOKE_SF_DIR, canonical_rows
 
@@ -34,6 +37,11 @@ def _assert_same(stream_df, batch_df, name):
     s, b = stream_df.toPandas(), batch_df.toPandas()
     assert sorted(s.columns) == sorted(b.columns), name
     assert canonical_rows(s) == canonical_rows(b), f"{name}: stream != batch twin"
+
+
+def _state_store_counts(query) -> set[int]:
+    return {p["stateOperators"][0]["numStateStoreInstances"]
+            for p in query.recentProgress if p["stateOperators"]}
 
 
 def test_tumbling_agg_twin(spark, harness):
@@ -119,6 +127,10 @@ def test_stateful_running_twin(spark, harness):
             timeoutConf=GroupStateTimeout.NoTimeout)
 
     out = harness.run(stateful, output_mode="update").toPandas()
+    # one state store per shuffle partition, which get_spark sizes to the
+    # session's cores (tests/test_session.py)
+    assert _state_store_counts(harness.last_query) == {
+        int(spark.conf.get("spark.sql.shuffle.partitions"))}
     # last emission per user = final state
     final = out.groupby("user_id").last().reset_index()
     twin = (tw.stream_stateful_running(spark, SMOKE_SF_DIR)
@@ -141,7 +153,6 @@ def test_foreach_batch_upsert_serving_table(spark, harness):
     harness.run(lambda s: s, output_mode="append",
                 foreach_batch=upsert_foreach_batch(serving))
     got = spark.read.parquet(serving).select("user_id", "event_id", "ts")
-    from lambdatotheslaughter_spark.streaming.harness import latest_per_user
     want = latest_per_user(load_table(spark, "events", SMOKE_SF_DIR)) \
         .select("user_id", "event_id", "ts")
     _assert_same(got, want, "foreach_batch_upsert")
@@ -239,9 +250,14 @@ def test_checkpoint_recovery_exactly_once(spark):
     state and offsets from the checkpoint — not reprocess the already-
     committed micro-batches — and (b) converge to exactly the batch twin
     over the full input. This is the lambda-genre behavior no other test
-    covers: exactly-once across a process boundary."""
-    import uuid
+    covers: exactly-once across a process boundary.
 
+    The first run uses 32 shuffle partitions (the engine's former fixed
+    default) and the restart the core-sized default: the restart must keep
+    the checkpoint's 32 state stores, which Spark restores from the offset
+    log, so checkpoints written before the default changed stay usable."""
+    conf = "spark.sql.shuffle.partitions"
+    default = spark.conf.get(conf)
     h = EventStreamHarness(spark, SMOKE_SF_DIR, n_chunks=4)
     hold_dir = tempfile.mkdtemp(prefix="lts_heldback_")
     ckpt = os.path.join(tempfile.gettempdir(),
@@ -262,8 +278,11 @@ def test_checkpoint_recovery_exactly_once(spark):
                     .trigger(availableNow=True)
                     .format("memory").queryName(name).start())
 
+        spark.conf.set(conf, "32")
         q1 = start(f"lts_recov1_{uuid.uuid4().hex[:6]}")
         q1.awaitTermination(timeout=300)  # drains chunks 0-1, then "crashes"
+        assert _state_store_counts(q1) == {32}
+        spark.conf.set(conf, default)
 
         # the held-back chunks arrive while the query is down
         for f in files[2:]:
@@ -273,6 +292,7 @@ def test_checkpoint_recovery_exactly_once(spark):
         name2 = f"lts_recov2_{uuid.uuid4().hex[:6]}"
         q2 = start(name2)
         q2.awaitTermination(timeout=300)
+        assert _state_store_counts(q2) == {32}
 
         # exactly-once convergence: restarted query's final complete-mode
         # emission equals the oracled batch twin over ALL events
@@ -288,6 +308,7 @@ def test_checkpoint_recovery_exactly_once(spark):
             f"restart read {p2_rows} of {total} rows — offsets were not "
             "recovered from the checkpoint")
     finally:
+        spark.conf.set(conf, default)
         h.cleanup()
         shutil.rmtree(hold_dir, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -301,10 +322,6 @@ def test_foreach_batch_upsert_survives_restart(spark):
     converge to exactly the batch latest-per-user view — the end-to-end
     exactly-once property a lambda serving layer promises (idempotent
     merge + offset tracking, not just stream-side state recovery)."""
-    import uuid
-
-    from lambdatotheslaughter_spark.streaming.harness import latest_per_user
-
     h = EventStreamHarness(spark, SMOKE_SF_DIR, n_chunks=4)
     hold_dir = tempfile.mkdtemp(prefix="lts_heldback_fb_")
     serving = os.path.join(tempfile.gettempdir(),
@@ -656,3 +673,68 @@ def test_changepoint_monitor_twin(spark, harness):
                  tw.changepoint_daily_revenue(
                      load_table(spark, "events", SMOKE_SF_DIR)),
                  "changepoint_daily_revenue")
+
+
+def test_upsert_replay_after_crash_mid_swap_keeps_every_key(spark):
+    """A crash inside the serving-table swap, after the old table was
+    renamed aside and before the merged one was renamed in, leaves no
+    table at the serving path. The replayed batch must restore the
+    set-aside table before merging, so the table converges to
+    latest_per_user over every delivered event instead of holding only
+    the replayed batch's keys. Interleaved chunks each span the whole
+    time range, so most users' latest event is not in the last batch."""
+    h = EventStreamHarness(spark, SMOKE_SF_DIR, n_chunks=4, arrival="interleaved")
+    serving = os.path.join(tempfile.gettempdir(), f"lts_serving_swap_{uuid.uuid4().hex[:8]}")
+    ckpt = os.path.join(tempfile.gettempdir(), f"lts_ckpt_swap_{uuid.uuid4().hex[:8]}")
+    merge = upsert_foreach_batch(serving)
+
+    def crash_mid_swap_in_last_batch(df, batch_id):
+        if batch_id < 3:
+            return merge(df, batch_id)
+        os.rename(serving, serving + ".old")
+        os.makedirs(serving + ".tmp", exist_ok=True)  # a half-written table
+        open(os.path.join(serving + ".tmp", "part-00000.parquet"), "w").close()
+        raise RuntimeError("crash mid-swap")
+
+    def start(fn):
+        return (h.source().writeStream
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .foreachBatch(fn).start())
+
+    try:
+        with pytest.raises(Exception, match="crash mid-swap"):
+            start(crash_mid_swap_in_last_batch).awaitTermination(timeout=300)
+        assert not os.path.exists(serving)
+
+        q = start(merge)
+        assert q.awaitTermination(timeout=300)
+        assert {p["batchId"] for p in q.recentProgress if p["numInputRows"]} == {3}
+        got = spark.read.parquet(serving).select("user_id", "event_id", "ts")
+        want = latest_per_user(load_table(spark, "events", SMOKE_SF_DIR)) \
+            .select("user_id", "event_id", "ts")
+        _assert_same(got, want, "upsert_replay_after_crash_mid_swap")
+        assert not os.path.exists(serving + ".old")
+    finally:
+        h.cleanup()
+        for path in (serving, serving + ".old", serving + ".tmp", ckpt):
+            shutil.rmtree(path, ignore_errors=True)
+
+
+def test_run_raises_when_the_batch_function_fails(spark, harness):
+    def fail(df, batch_id):
+        raise ValueError("batch function failed")
+
+    with pytest.raises(Exception, match="batch function failed"):
+        harness.run(lambda s: s, output_mode="append", foreach_batch=fail)
+    assert not harness.last_query.isActive
+
+
+def test_run_stops_the_query_and_raises_on_timeout(spark, harness, monkeypatch):
+    def slow(df, batch_id):
+        time.sleep(3)
+
+    monkeypatch.setattr(harness_mod, "RUN_TIMEOUT_S", 1)
+    with pytest.raises(TimeoutError):
+        harness.run(lambda s: s, output_mode="append", foreach_batch=slow)
+    assert not harness.last_query.isActive
